@@ -1,6 +1,20 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** `SPARK_GRAFT_CONF`: semicolon-separated `key=value` pairs (an empty
+    * string and a trailing `;` are allowed). A segment without `=`, or with
+    * an empty key or one containing whitespace, fails naming the segment —
+    * a typo'd A/B conf must not be silently dropped or set under the wrong
+    * key. */
+  def parseConf(spec: String): Seq[(String, String)] =
+    if (spec.isEmpty) Nil else spec.split(";").toSeq.map { seg =>
+      seg.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty && !k.exists(_.isWhitespace) => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF: segment '$seg' is not key=value with a non-blank key")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -28,13 +42,10 @@ object Bench {
       .config("spark.ui.enabled", "false")
     // r13: generic conf passthrough for isolated A/Bs (e.g. the VERDICT
     // #7 state-partition floor sweep: SPARK_GRAFT_CONF=
-    // "spark.graft.streaming.statePartitions=4"). Semicolon-separated
-    // k=v pairs; never set by the driver → no effect on official runs.
-    val builder2 = sys.env.get("SPARK_GRAFT_CONF").map(_.split(";").toSeq)
-      .getOrElse(Nil).filter(_.contains("="))
-      .foldLeft(builder) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
+    // "spark.graft.streaming.statePartitions=4"); never set by the driver
+    // → no effect on official runs.
+    val builder2 = sys.env.get("SPARK_GRAFT_CONF").map(parseConf).getOrElse(Nil)
+      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
     val spark = builder2.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm up the JVM/codegen/file-index paths so the first timed query

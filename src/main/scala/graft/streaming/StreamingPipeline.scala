@@ -123,7 +123,9 @@ object StreamingPipeline {
   /** A7+A16+A17 — multi-sink fan-out per micro-batch: one batch, two writes
     * (zoned lake + catalog), idempotent under replay because message_id is
     * deterministic (sha-256 of payload) and both writes are append-only
-    * keyed by it. */
+    * keyed by it. Unlike the batch `Pipeline.writeLake`, the catalog rows
+    * come from the persisted batch, not from a read-back: an append cannot
+    * read back only its own rows. */
   def lakeSink(events: DataFrame, lakeRoot: String, checkpoint: String): DataStreamWriter[Row] =
     events.writeStream
       .option("checkpointLocation", checkpoint)
@@ -132,11 +134,7 @@ object StreamingPipeline {
         batch.write.mode("append")
           .partitionBy("zone", "protocol")
           .parquet(s"$lakeRoot/messages")
-        batch.select(
-            col("message_id"),
-            concat(lit("zone="), col("zone"), lit("/protocol="), col("protocol")).as("path"),
-            col("source"), col("zone"), col("format"), col("content_type"),
-            current_timestamp().as("ingest_ts"))
+        Pipeline.catalogRows(batch)
           .write.mode("append").parquet(s"$lakeRoot/catalog")
         batch.unpersist()
         ()

@@ -2,6 +2,7 @@ package graft.hl7
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 
 /** Spark-native re-expression of the reference's full data plane:
   *
@@ -176,6 +177,12 @@ object Pipeline {
       col("source"), col("zone"), col("format"), col("content_type"),
       current_timestamp().as("ingest_ts"))
 
+  /** The schema of a `catalogRows` table as parquet reads it back, declared
+    * so a catalog read needs no schema-inference job. */
+  val CatalogSchema: StructType = StructType(
+    Seq("message_id", "path", "source", "zone", "format", "content_type")
+      .map(StructField(_, StringType)) :+ StructField("ingest_ts", TimestampType))
+
   /** A16/A17 — partitioned lake sink + catalog. Partition layout
     * mirrors the reference's key scheme `zone/protocol=…`
     * (`core_stack.yml:151`); the catalog is a queryable table instead of
@@ -309,10 +316,8 @@ object Pipeline {
     nFiles
   }
 
-  /** A19 — point retrieval: catalog filter + payload join, LIMIT 1 semantics.
-    * The single catalog hit is broadcast into the join, but the messages
-    * scan carries no partition filter: the hit's zone/protocol `path` is not
-    * pushed into it, so every lookup opens every lake partition. */
+  /** A19 — point retrieval, LIMIT 1 semantics; see the format-qualified
+    * variant for the two steps it runs. */
   def retrieve(spark: SparkSession, lakeRoot: String, messageId: String): DataFrame =
     retrieve(spark, lakeRoot, messageId, None)
 
@@ -320,15 +325,39 @@ object Pipeline {
     * `GET /hl7v2/format/{format}/msg_uuid/{msg_uuid}`
     * (`old_reference/hcdl_stack.txt:503-510`): the same message exists in
     * both er7 (ingestion zone) and json (staging zone); the format picks
-    * which materialization to fetch. */
+    * which materialization to fetch.
+    *
+    * A point read in two steps, like the reference's catalog lookup
+    * followed by one object fetch:
+    *  1. Resolve the hit: the catalog, read with [[CatalogSchema]] (no
+    *     inference job), filtered on the id and the optional format, gives
+    *     the first hit's `path`, `format` and `ingest_ts`. One job, run
+    *     inside this call.
+    *  2. Read only the hit's `messages/zone=…/protocol=…` directory, with
+    *     `basePath` so `zone` and `protocol` stay columns, filtered on the
+    *     id and the hit's format. Inside this call the read runs one
+    *     parquet schema-inference job (the messages schema is not fixed:
+    *     the streaming lake has no `segments`); collecting the returned
+    *     frame runs one more job over that partition alone.
+    * On a miss the same read covers the whole `messages/` directory under
+    * an always-false filter: the frame is empty, the optimizer drops its
+    * scan, and it has the columns of a hit — `message_id`, `format`, the
+    * other message columns, `path`, `ingest_ts`. */
   def retrieve(spark: SparkSession, lakeRoot: String, messageId: String,
                format: Option[String]): DataFrame = {
-    val cat = spark.read.parquet(s"$lakeRoot/catalog")
+    val messages = s"$lakeRoot/messages"
+    val cat = spark.read.schema(CatalogSchema).parquet(s"$lakeRoot/catalog")
       .filter(col("message_id") === messageId)
-    val hit = format.fold(cat)(f => cat.filter(col("format") === f)).limit(1)
-    spark.read.parquet(s"$lakeRoot/messages")
-      .join(broadcast(hit.select("message_id", "path", "format", "ingest_ts")),
-            Seq("message_id", "format"))
+    val hit = format.fold(cat)(f => cat.filter(col("format") === f))
+      .select("path", "format", "ingest_ts").limit(1).collect().headOption
+    val part = spark.read.option("basePath", messages)
+      .parquet(hit.fold(messages)(h => s"$messages/${h.getString(0)}"))
+      .filter(hit.fold(lit(false))(h =>
+        col("message_id") === messageId && col("format") === h.getString(1)))
+    val rest = part.columns.filterNot(Set("message_id", "format")).map(col)
+    part.select(Seq(col("message_id"), col("format")) ++ rest ++ Seq(
+      lit(hit.map(_.get(0)).orNull).cast(StringType).as("path"),
+      lit(hit.map(_.get(2)).orNull).cast(TimestampType).as("ingest_ts")): _*)
   }
 
   // ------------------------------------------------------------------

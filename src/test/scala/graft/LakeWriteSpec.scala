@@ -6,6 +6,7 @@ import java.security.MessageDigest
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
@@ -14,13 +15,16 @@ import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.hl7.Pipeline
+import graft.streaming.StreamingPipeline
 
 /** `Pipeline.writeLake` over a small self-made inbox: the catalog is exactly
   * a projection of the written lake, and the inbox is scanned and parsed
-  * once per lake write. */
+  * once per lake write. `Pipeline.retrieve` over that lake and over a
+  * streaming-written one: a hit reads one partition directory, and hits and
+  * misses have the same columns. */
 class LakeWriteSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -94,6 +98,106 @@ class LakeWriteSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val staged = Pipeline.retrieve(spark, lake, id, Some("json")).select("zone").collect()
     assert(staged.toSeq == Seq(Row("staging")))
     assert(Pipeline.retrieve(spark, lake, sha256("absent")).collect().isEmpty)
+  }
+
+  /** The inbox drained through `StreamingPipeline.run`: staged and error
+    * rows only, and no `segments` column. */
+  private lazy val streamLake: String = {
+    val root = newRoot()
+    StreamingPipeline.run(spark, inbox.toString, root, s"$root/_ckpt")
+    root
+  }
+
+  /** The hit's catalog row, as `retrieve` resolves it. */
+  private def catalogHit(root: String, id: String, format: String): Row =
+    spark.read.parquet(s"$root/catalog")
+      .filter(col("message_id") === id && col("format") === format)
+      .select("path", "ingest_ts").collect().head
+
+  test("a hit's plan scans only the hit's zone/protocol directory") {
+    val id = sha256(oru)
+    val df = Pipeline.retrieve(spark, lake, id, Some("json"))
+    assert(df.collect().length == 1)
+    val scans = collectWithSubqueries(df.queryExecution.executedPlan) {
+      case f: FileSourceScanExec => f
+    }
+    assert(scans.size == 1, s"expected one file scan, got ${scans.size}")
+    val dir = s"$lake/messages/zone=staging/protocol=hl7v2"
+    val roots = scans.head.relation.location.rootPaths.map(_.toUri.getPath)
+    assert(roots == Seq(dir), s"scan roots $roots")
+    val files = scans.head.relation.location.inputFiles
+    assert(files.nonEmpty && files.forall(_.contains(s"$dir/")), files.mkString(", "))
+  }
+
+  test("retrieve and collect of a hit run at most 3 jobs") {
+    val id = sha256(oru)
+    val group = s"lake-retrieve-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobs.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "retrieve")
+      assert(Pipeline.retrieve(spark, lake, id).collect().length == 1)
+      // the bus delivers events in order: once the sentinel job is seen,
+      // every job of the lookup has been seen too
+      sc.setJobGroup(sentinel, "sentinel")
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.contains(sentinel), "listener never saw the sentinel job")
+    val n = jobs.toArray.count(_ == group)
+    assert(n >= 1 && n <= 3, s"$n jobs for one lookup")
+  }
+
+  test("hits and misses return the same columns; a hit carries its catalog row") {
+    val id = sha256(adt)
+    val hit = Pipeline.retrieve(spark, lake, id, Some("er7"))
+    val absent = Pipeline.retrieve(spark, lake, sha256("absent"))
+    val wrongFormat = Pipeline.retrieve(spark, lake, id, Some("txt"))
+    assert(absent.collect().isEmpty && wrongFormat.collect().isEmpty)
+    val names = hit.columns.toSeq
+    assert(names.take(2) == Seq("message_id", "format"))
+    assert(names.takeRight(2) == Seq("path", "ingest_ts"))
+    assert(names.contains("msg") && names.contains("zone") && names.contains("protocol"))
+    assert(absent.columns.toSeq == names && wrongFormat.columns.toSeq == names)
+    assert(absent.schema.map(_.dataType) == hit.schema.map(_.dataType))
+    val got = hit.select("path", "ingest_ts").collect()
+    assert(got.toSeq == Seq(catalogHit(lake, id, "er7")))
+    assert(got.head.getString(0) == "zone=ingestion/protocol=hl7v2")
+  }
+
+  test("retrieve reads a streaming-written lake, which has no segments column") {
+    val lakeColumns = spark.read.parquet(s"$streamLake/messages").columns.toSet
+    assert(!lakeColumns.contains("segments"))
+    val id = sha256(oru)
+    val hit = Pipeline.retrieve(spark, streamLake, id)
+    assert(hit.columns.toSet == lakeColumns ++ Set("path", "ingest_ts"))
+    val got = hit.select("msg", "format", "path", "ingest_ts").collect()
+    assert(got.length == 1 && sha256(got.head.getString(0)) == id)
+    assert(got.head.getString(1) == "json")
+    assert(Row(got.head.get(2), got.head.get(3)) == catalogHit(streamLake, id, "json"))
+    assert(Pipeline.retrieve(spark, streamLake, sha256("absent")).collect().isEmpty)
+  }
+
+  test("both lake writers write the declared catalog schema, and every path is a directory") {
+    def namesAndTypes(s: StructType) = s.fields.toSeq.map(f => f.name -> f.dataType)
+    for (root <- Seq(lake, streamLake)) {
+      val catalog = spark.read.parquet(s"$root/catalog")
+      assert(namesAndTypes(catalog.schema) == namesAndTypes(Pipeline.CatalogSchema), root)
+      val paths = catalog.select("path").distinct().collect().map(_.getString(0))
+      assert(paths.nonEmpty)
+      for (p <- paths) assert(Files.isDirectory(Path.of(s"$root/messages/$p")), s"$root: $p")
+    }
   }
 
   private def handBuilt(zone: String, protocol: String): DataFrame = {
